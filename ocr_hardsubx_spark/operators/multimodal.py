@@ -5,9 +5,9 @@ A 100 TB training-data pipeline carries media payloads next to text:
 ``mapInPandas`` stages exactly like the html pipeline.  The Spark-side
 plumbing here — schemas, batch iteration, partition behavior, UDF
 signatures — is real and tested.  Decode is REAL for PNG (incl.
-palette), baseline JPEG, GIF and WAV via stdlib codecs
-(functions/media_codecs.py), and the mp4 probe reads real box structure;
-unsupported subsets feature-detect Pillow and otherwise fall back to a
+palette), GIF and WAV via stdlib codecs (functions/media_codecs.py), and
+the mp4 probe reads real box structure; JPEG and other formats without
+a stdlib codec feature-detect Pillow and otherwise fall back to a
 DECLARED deterministic fake, so downstream arithmetic is always
 exercised with stable values.  Swapping codecs changes no Spark code.
 
@@ -85,22 +85,20 @@ def _fake_image(payload: bytes) -> np.ndarray:
 
 def _decode_image(payload: bytes) -> tuple[np.ndarray, bool]:
     """Decode to ((H, W) uint8 luminance, decoded_real).  PNG (incl.
-    palette), baseline JPEG and GIF decode for REAL via the stdlib codecs
-    (functions/media_codecs.py); unsupported subsets (progressive JPEG,
-    interlaced GIF) go through Pillow when importable; the
+    palette) and GIF decode for REAL via the stdlib codecs
+    (functions/media_codecs.py); JPEG goes through Pillow when
+    importable; the
     deterministic fake remains the declared fallback of last resort and
     is FLAGGED: decoded_real=False rides the output schema so a corpus
     full of undecodable payloads is visible, not silently fake."""
     from ..functions.media_codecs import (
         UnsupportedMedia,
         decode_gif,
-        decode_jpeg,
         decode_png,
     )
 
     fmt = sniff_format(payload)
-    codec = {"png": decode_png, "jpeg": decode_jpeg,
-             "gif": decode_gif}.get(fmt)
+    codec = {"png": decode_png, "gif": decode_gif}.get(fmt)
     if codec is not None:
         try:
             return codec(payload), True

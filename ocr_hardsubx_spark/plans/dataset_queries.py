@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .packaging import REPO_DIR
+
 N_BANDS = 4  # MinHash LSH bands (each band = one 8-hex slice of an md5)
 # the band hashes are disjoint 8-hex-char slices of one 32-char digest —
 # more than 4 bands would slice past the digest and silently yield ''
@@ -1244,7 +1246,7 @@ def q_ann_ivf_topk_sql() -> str:
 # IVF over the PERSISTED ingest-time layout (scan pruning on the probe)
 # --------------------------------------------------------------------------
 
-IVF_LAYOUT_BASE = "/root/repo/data/ivf_layout"
+IVF_LAYOUT_BASE = os.path.join(REPO_DIR, "data", "ivf_layout")
 IVF_TMP_TTL_S = 3600  # orphaned-builder temp dirs older than this are swept
 # a RECYCLED pid can make a dead builder's orphan look alive forever
 # (os.kill(pid, 0) succeeds for the unrelated process that now owns the

@@ -15,8 +15,10 @@ import os
 import zipfile
 
 _PKG_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_REPO_DIR = os.path.dirname(_PKG_DIR)
-DIST_ZIP = os.path.join(_REPO_DIR, "dist", "ocr_hardsubx_spark.zip")
+# the checkout root: data roots resolve against it, so a copy of the tree
+# never reads from another checkout
+REPO_DIR = os.path.dirname(_PKG_DIR)
+DIST_ZIP = os.path.join(REPO_DIR, "dist", "ocr_hardsubx_spark.zip")
 
 _registered: set[str] = set()
 
@@ -30,7 +32,7 @@ def build_pyfiles_zip(zip_path: str = DIST_ZIP) -> str:
         for f in files:
             if f.endswith(".py"):
                 sources.append(os.path.join(root, f))
-    models_dir = os.path.join(_REPO_DIR, "models")
+    models_dir = os.path.join(REPO_DIR, "models")
     if os.path.isdir(models_dir):
         sources += [os.path.join(models_dir, f)
                     for f in os.listdir(models_dir) if f.endswith(".json")]
@@ -41,7 +43,7 @@ def build_pyfiles_zip(zip_path: str = DIST_ZIP) -> str:
     tmp = zip_path + ".tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
         for p in sources:
-            z.write(p, os.path.relpath(p, _REPO_DIR))
+            z.write(p, os.path.relpath(p, REPO_DIR))
     os.replace(tmp, zip_path)
     return zip_path
 

@@ -13,9 +13,9 @@ from ocr_hardsubx_spark.plans.pipeline import (
     run_extraction_job,
     salt_repartition,
 )
+from ocr_hardsubx_spark.plans.queries import PART_DOCS as PART_CORPUS
 from ocr_hardsubx_spark.sources.fixtures import write_documents
 
-PART_CORPUS = "/root/repo/data/fixtures/documents_part"
 N_DOCS = 200
 
 
